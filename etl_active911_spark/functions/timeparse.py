@@ -208,7 +208,14 @@ def parse_alert_time(col: Column, now_year: int | None = None) -> Column:
     ``now_year`` (optional) pins moment's missing-year default — the year
     of the reference instant 'now' in the input's zone frame.
     """
-    ntz_utc = parse_alert_time_ntz(col, now_year)
+    return utc_instant(parse_alert_time_ntz(col, now_year))
+
+
+def utc_instant(ntz_utc: Column) -> Column:
+    """A UTC wall clock (TIMESTAMP_NTZ) → the same instant as TIMESTAMP,
+    session-zone independent (see ``parse_alert_time``). Reads
+    ``ntz_utc`` six times: inside a higher-order lambda, pass a bound
+    lambda variable (CLAUDE.md rule 39)."""
     return F.make_timestamp(
         F.year(ntz_utc),
         F.month(ntz_utc),
@@ -248,8 +255,3 @@ def sent_iso_col(name: str = "sent", now_year: int | None = None) -> Column:
         lambda: parse_alert_time_iso(F.col(name), now_year),
     )
 
-
-def tz_case_sql(ts_expr: str) -> str:
-    """DuckDB-side equivalent for oracle SQL: CASE mapping abbr→IANA."""
-    cases = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in TIMEZONE_MAPPINGS.items())
-    return f"CASE {ts_expr} {cases} ELSE NULL END"

@@ -99,6 +99,33 @@ def js_number(col: Column) -> Column:
     return F.when(t == "", F.lit(0.0)).otherwise(t.try_cast("double"))
 
 
+def _coordinate_cols() -> tuple[Column, Column, Column]:
+    """O-10 as ``(keep, lon, lat)`` Columns, shared by
+    ``resolve_coordinates`` and ``to_features``. Memoized per application
+    (rule 35): a fixed tree over the named alert columns."""
+    from etl_active911_spark.plans.cache import memo_cols
+
+    return memo_cols("active911.coordinates", _build_coordinate_cols)
+
+
+def _build_coordinate_cols() -> tuple[Column, Column, Column]:
+    lon0 = js_number(F.col("lon"))
+    lat0 = js_number(F.col("lat"))
+    # NULL (NaN) comparisons yield NULL → coalesce to False, matching
+    # JS `NaN === 0` being false (task.ts:172).
+    needs_fallback = F.coalesce((lon0 == 0) | (lat0 == 0), F.lit(False))
+
+    coords = F.slice(F.split(F.trim(F.col("place")), ","), 1, 2)
+    place_lat = js_number(F.element_at(coords, 1))
+    place_lon = js_number(F.try_element_at(coords, F.lit(2)))
+    fallback_ok = (F.size(coords) == 2) & place_lat.isNotNull() & place_lon.isNotNull()
+    return (
+        ~needs_fallback | fallback_ok,
+        F.when(needs_fallback, place_lon).otherwise(lon0),
+        F.when(needs_fallback, place_lat).otherwise(lat0),
+    )
+
+
 def resolve_coordinates(alerts: DataFrame) -> DataFrame:
     """O-10 (task.ts:172-185): if Number(lon)===0 or Number(lat)===0, fall
     back to parsing ``place`` as 'lat,lon' (note the swap: place is
@@ -110,27 +137,13 @@ def resolve_coordinates(alerts: DataFrame) -> DataFrame:
 
     Emits ``lon_d``/``lat_d`` double columns next to the original strings.
     """
-    lon0 = js_number(F.col("lon"))
-    lat0 = js_number(F.col("lat"))
-    # NULL (NaN) comparisons yield NULL → coalesce to False, matching
-    # JS `NaN === 0` being false (task.ts:172).
-    needs_fallback = F.coalesce((lon0 == 0) | (lat0 == 0), F.lit(False))
-
-    coords = F.slice(F.split(F.trim(F.col("place")), ","), 1, 2)
-    place_lat = js_number(F.element_at(coords, 1))
-    place_lon = js_number(F.try_element_at(coords, F.lit(2)))
-    fallback_ok = (F.size(coords) == 2) & place_lat.isNotNull() & place_lon.isNotNull()
-
+    keep, lon, lat = _coordinate_cols()
     # One filter + one select (not chained withColumns): every chained
     # withColumn re-analyzes the whole plan driver-side — 6 passes over
     # the fixture plan cost ~0.3 s per invocation (r14 a911 anchor
     # attribution, BASELINE.md r14). Catalyst collapses the projections
     # identically either way; only the build cost differs.
-    return alerts.filter(~needs_fallback | fallback_ok).select(
-        "*",
-        F.when(needs_fallback, place_lon).otherwise(lon0).alias("lon_d"),
-        F.when(needs_fallback, place_lat).otherwise(lat0).alias("lat_d"),
-    )
+    return alerts.filter(keep).select("*", lon.alias("lon_d"), lat.alias("lat_d"))
 
 
 def extract_responses(alerts: DataFrame, time_as_iso: bool = False) -> DataFrame:
@@ -206,12 +219,14 @@ def links_array_native(time_as_iso: bool = False) -> Column:
     (SURVEY.md §7 "semantics-preserving shortcut": ``responses`` never
     leaves its alert row, so dedup can stay inside the row).
 
-    keys = first-occurrence-ordered distinct callsigns (array_distinct
-    preserves first occurrence = Map insertion order, task.ts:187-209);
-    each key's link carries the LAST matching line's fields (last-wins).
-    Arrays are bounded by the response-log length (a few lines), so the
-    interpreted-lambda cost is constant per row — unlike corpus-sized
-    hot paths (see SCALE.md invariant 3).
+    Each 'Got a response of ' line is regex-parsed ONCE into a
+    (matched, k, g1, g4) struct, and the parsed array is let-bound
+    (``_let``), so every later reference reads a lambda variable instead
+    of re-parsing the lines. keys = first-occurrence-ordered distinct k
+    (array_distinct preserves first occurrence = Map insertion order,
+    task.ts:187-209); each key keeps its LAST parsed line (last-wins),
+    and only that survivor's time is parsed, once per link. A NULL
+    ``responses`` yields no links, as in the explode formulation.
     """
     from etl_active911_spark.plans.cache import memo_cols
 
@@ -226,34 +241,62 @@ def links_array_native(time_as_iso: bool = False) -> Column:
     )
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row. Higher-order
+    lambdas get no common-subexpression elimination, so a Column referenced
+    k times inside one is evaluated k times; as the variable of a
+    one-element ``transform`` every reference is a cheap variable read
+    (CLAUDE.md rule 39)."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def _build_links_array(time_as_iso: bool) -> Column:
-    from etl_active911_spark.functions.timeparse import parse_alert_time_iso
-
-    time_fn = parse_alert_time_iso if time_as_iso else parse_alert_time
-
-    lines = F.filter(
-        F.split(F.col("responses"), "\n"), lambda l: l.startswith(RESPONSE_PREFIX)
+    from etl_active911_spark.functions.timeparse import (
+        parse_alert_time_iso,
+        parse_alert_time_ntz,
+        utc_instant,
     )
 
-    def key_of(l: Column) -> Column:
-        return F.when(
-            l.rlike(RESPONSE_REGEX), F.trim(F.regexp_extract(l, RESPONSE_REGEX, 2))
-        ).otherwise(F.lit("Unknown"))
+    def time_of(s: Column) -> Column:
+        if time_as_iso:
+            return parse_alert_time_iso(s)
+        # parse_alert_time reads its parsed wall clock once per field
+        return _let(parse_alert_time_ntz(s), utc_instant)
 
-    keys = F.array_distinct(F.transform(lines, key_of))
+    lines = F.filter(
+        F.split(F.coalesce(F.col("responses"), F.lit("")), "\n"),
+        lambda l: l.startswith(RESPONSE_PREFIX),
+    )
+    # The single regex pass per line. Group 2 is `(.+?)`, non-empty on
+    # every match, so `g2 != ''` is the match test without a fourth regex.
+    g = lambda l, i: F.regexp_extract(l, RESPONSE_REGEX, i)  # noqa: E731
+    parsed = F.transform(
+        lines, lambda l: F.struct(g(l, 1).alias("g1"), g(l, 2).alias("g2"), g(l, 4).alias("g4"))
+    )
+    keyed = F.transform(
+        parsed,
+        lambda p: F.struct(
+            (p.g2 != "").alias("matched"),
+            F.when(p.g2 != "", F.trim(p.g2)).otherwise(F.lit("Unknown")).alias("k"),
+            p.g1.alias("g1"),
+            p.g4.alias("g4"),
+        ),
+    )
 
-    def link_of(k: Column) -> Column:
-        last_line = F.element_at(F.filter(lines, lambda l: key_of(l) == k), -1)
-        matched = last_line.rlike(RESPONSE_REGEX)
-        g = lambda i: F.regexp_extract(last_line, RESPONSE_REGEX, i)  # noqa: E731
+    def link_of(p: Column) -> Column:
         return F.struct(
             F.lit("t-s").alias("relation"),
-            k.alias("callsign"),
-            F.when(matched, F.trim(g(1))).otherwise(F.lit("Unknown")).alias("remarks"),
-            F.when(matched, time_fn(F.trim(g(4)))).alias("production_time"),
+            p.k.alias("callsign"),
+            F.when(p.matched, F.trim(p.g1)).otherwise(F.lit("Unknown")).alias("remarks"),
+            F.when(p.matched, time_of(F.trim(p.g4))).alias("production_time"),
         )
 
-    return F.transform(keys, link_of)
+    def links_of(ks: Column) -> Column:
+        keys = F.array_distinct(F.transform(ks, lambda p: p.k))
+        last = F.transform(keys, lambda k: F.element_at(F.filter(ks, lambda p: p.k == k), -1))
+        return F.transform(last, link_of)
+
+    return _let(keyed, links_of)
 
 
 def alert_remarks() -> Column:
@@ -267,55 +310,51 @@ def alert_remarks() -> Column:
     )
 
 
+def _feature_cols(links: Column, lon: Column, lat: Column) -> list[Column]:
+    """The nested Feature projection (task.ts:214-231)."""
+    return [
+        F.concat(F.lit("active911-"), F.col("id")).alias("id"),
+        F.lit("Feature").alias("type"),
+        F.struct(
+            F.col("description").alias("callsign"),
+            parse_alert_time(F.col("sent")).alias("start"),
+            links.alias("links"),
+            alert_remarks().alias("remarks"),
+        ).alias("properties"),
+        F.struct(
+            F.lit("Point").alias("type"),
+            F.array(lon, lat).alias("coordinates"),
+        ).alias("geometry"),
+    ]
+
+
+def _native_feature_cols() -> tuple[Column, list[Column]]:
+    keep, lon, lat = _coordinate_cols()
+    return keep, _feature_cols(links_array_native(), lon, lat)
+
+
 def to_features(alerts: DataFrame, array_native: bool = True) -> DataFrame:
     """Full O-9…O-20 pipeline: alerts (24 string cols) → GeoJSON features
     (task.ts:214-231). Returns one row per feature, nested struct schema
     matching FIXTURES.md §A.4.
 
     ``array_native=True`` (default) computes links inside each row — the
-    whole pipeline is then one narrow stage with ZERO shuffles. The
+    whole pipeline is then one narrow stage with ZERO shuffles, built as
+    one filter and one select whose Columns are memoized per application
+    (rule 35; a reused alias still gets a fresh exprId in each plan). The
     explode+aggregate formulation (``array_native=False``) produces
     identical results (asserted in tests) and exists because its exploded
     intermediates are what the flat oracle queries check.
     """
-    resolved = resolve_coordinates(alerts)
     if array_native:
-        with_links = resolved.withColumn("links", links_array_native())
-        return with_links.select(
-            F.concat(F.lit("active911-"), F.col("id")).alias("id"),
-            F.lit("Feature").alias("type"),
-            F.struct(
-                F.col("description").alias("callsign"),
-                parse_alert_time(F.col("sent")).alias("start"),
-                F.col("links"),
-                alert_remarks().alias("remarks"),
-            ).alias("properties"),
-            F.struct(
-                F.lit("Point").alias("type"),
-                F.array(F.col("lon_d"), F.col("lat_d")).alias("coordinates"),
-            ).alias("geometry"),
-        )
+        from etl_active911_spark.plans.cache import memo_cols
+
+        keep, cols = memo_cols("active911.features", _native_feature_cols)
+        return alerts.filter(keep).select(*cols)
     links = links_array(dedupe_links(extract_responses(alerts)))
-    with_links = resolved.join(links, "id", "left").withColumn(
-        "links",
-        F.coalesce(
-            F.col("links"),
-            F.array().cast(
-                "array<struct<relation:string,callsign:string,remarks:string,production_time:timestamp>>"
-            ),
-        ),
+    no_links = F.array().cast(
+        "array<struct<relation:string,callsign:string,remarks:string,production_time:timestamp>>"
     )
-    return with_links.select(
-        F.concat(F.lit("active911-"), F.col("id")).alias("id"),
-        F.lit("Feature").alias("type"),
-        F.struct(
-            F.col("description").alias("callsign"),
-            parse_alert_time(F.col("sent")).alias("start"),
-            F.col("links"),
-            alert_remarks().alias("remarks"),
-        ).alias("properties"),
-        F.struct(
-            F.lit("Point").alias("type"),
-            F.array(F.col("lon_d"), F.col("lat_d")).alias("coordinates"),
-        ).alias("geometry"),
+    return resolve_coordinates(alerts).join(links, "id", "left").select(
+        *_feature_cols(F.coalesce(F.col("links"), no_links), F.col("lon_d"), F.col("lat_d"))
     )

@@ -34,12 +34,29 @@ GATE_MODULES = {
 FULL_ENV = "SPARK_GRAFT_FULL_TESTS"
 
 
+def named_test_files(args: list[str], cwd: str) -> set[str]:
+    """The test FILES named on the command line, as paths or node ids
+    (``tests/test_x.py::test_y``). Directories are not files: a bare
+    ``pytest tests/`` names none and keeps the gate, while
+    ``pytest tests/test_active911.py`` runs that module in full instead
+    of deselecting all of it."""
+    named = set()
+    for arg in args:
+        path = os.path.abspath(os.path.join(cwd, arg.split("::")[0]))
+        if os.path.isfile(path):
+            named.add(path)
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get(FULL_ENV) == "1":
         return
+    named = named_test_files(config.args, str(config.invocation_params.dir))
     keep, drop = [], []
     for item in items:
-        (keep if os.path.basename(str(item.fspath)) in GATE_MODULES else drop).append(item)
+        path = str(item.fspath)
+        gated_in = os.path.basename(path) in GATE_MODULES or os.path.abspath(path) in named
+        (keep if gated_in else drop).append(item)
     if not drop:
         return
     config.hook.pytest_deselected(items=drop)

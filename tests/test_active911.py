@@ -20,7 +20,7 @@ from etl_active911_spark.pipeline.active911 import (
 )
 
 
-def make_alert(spark, **overrides):
+def alert_row(**overrides) -> tuple:
     base = {c: "" for c in ALERT_COLUMNS}
     base.update(
         id="1",
@@ -33,7 +33,11 @@ def make_alert(spark, **overrides):
         details="Some details",
     )
     base.update(overrides)
-    return spark.createDataFrame([tuple(base[c] for c in ALERT_COLUMNS)], ALERTS_SCHEMA)
+    return tuple(base[c] for c in ALERT_COLUMNS)
+
+
+def make_alert(spark, **overrides):
+    return spark.createDataFrame([alert_row(**overrides)], ALERTS_SCHEMA)
 
 
 # --- O-15 parseTime (task.ts:45-76) ---------------------------------------
@@ -300,6 +304,126 @@ def test_array_native_equals_explode_formulation(spark):
     b = to_features(alerts, array_native=False).collect()
     canon = lambda rows: sorted((r["id"], repr(r["properties"]), repr(r["geometry"])) for r in rows)  # noqa: E731
     assert canon(a) == canon(b)
+
+
+def _resp(remarks: str, callsign: str, when: str) -> str:
+    return f"Got a response of {remarks} to {callsign}(4242) at {when}."
+
+
+#: Adversarial response logs for the two links formulations: NULL, empty
+#: and blank logs, CRLF endings, 30+ lines with repeated and space-padded
+#: callsigns, prefix-matching but regex-unmatched lines, and malformed,
+#: overflowing and 2-digit-year times.
+ADVERSARIAL_RESPONSES = [
+    None,
+    "",
+    "   \n \n",
+    "\r\n".join(
+        [
+            _resp("Respond", "Nick", "12/08/2025 18:28:20 MST"),
+            "Got a response of unmatched under CRLF",
+            _resp("Arrived", "Nick", "12/08/2025 18:40:00 MST"),
+            "",
+        ]
+    ),
+    "\n".join(
+        _resp(
+            f"R{i}",
+            ["Nick", " Nick ", "Jane", "  Jane", "Unit 7"][i % 5],
+            f"12/{i % 28 + 1:02d}/2025 18:{i:02d}:00 EST",
+        )
+        for i in range(34)
+    ),
+    "\n".join(
+        [
+            "Got a response of ",
+            "Got a response of no parens to Nick at 12/08/2025 18:28:20 MST.",
+            "Got a response of Respond to Nick(12) at 12/08/2025 18:28:20 MST",
+            "got a response of Respond to Nick(12) at 12/08/2025 18:28:20 MST.",
+            " Got a response of Respond to Nick(12) at 12/08/2025 18:28:20 MST.",
+            _resp("Respond", "Unknown", "12/08/2025 18:28:20 MST"),
+            "Got a response of trailing unmatched",
+        ]
+    ),
+    "\n".join(
+        [
+            _resp("Bad month", "A", "13/08/2025 18:28:20 MST"),
+            _resp("Bad hour", "B", "12/08/2025 99:28:20 MST"),
+            _resp("Two-digit year", "C", "12/08/25 18:28:20 PST"),
+            _resp("Two-digit old year", "D", "12/08/69 18:28:20 PST"),
+            _resp("Junk", "E", "soon"),
+            _resp("Unpadded", "F", "1/8/2025 3:27:47 XYZ"),
+            _resp("Overflow", "G", "99999999999/8/2025 18:28:20 MST"),
+            _resp("Feb 30", "A", "02/30/2025 10:00:00 EST"),
+            _resp("Blank", "   ", "12/08/2025 18:28:20 MST"),
+        ]
+    ),
+]
+
+
+def _adversarial_alerts(spark):
+    return spark.createDataFrame(
+        [alert_row(id=str(i), responses=r) for i, r in enumerate(ADVERSARIAL_RESPONSES)],
+        ALERTS_SCHEMA,
+    )
+
+
+def test_array_native_equals_explode_on_adversarial_responses(spark):
+    """Row for row, the let-bound array-native links equal the
+    explode+dedup+aggregate formulation on every adversarial log."""
+    alerts = _adversarial_alerts(spark)
+    a = sorted(to_features(alerts, array_native=True).collect())
+    b = sorted(to_features(alerts, array_native=False).collect())
+    assert len(a) == len(ADVERSARIAL_RESPONSES)
+    assert a == b
+    links = {r["id"]: r["properties"]["links"] for r in a}
+    # non-vacuity: the inputs reach every branch being compared
+    assert links["active911-0"] == [] and links["active911-2"] == []
+    assert [l["remarks"] for l in links["active911-3"]] == ["Arrived", "Unknown"]
+    padded = links["active911-4"]
+    assert [l["callsign"] for l in padded] == ["Nick", "Jane", "Unit 7"]
+    assert [l["remarks"] for l in padded] == ["R31", "R33", "R29"]
+    unknown = links["active911-5"]
+    assert [l["callsign"] for l in unknown] == ["Unknown"]
+    assert unknown[0]["remarks"] == "Unknown" and unknown[0]["production_time"] is None
+    times = {l["callsign"]: l["production_time"] for l in links["active911-6"]}
+    assert times["A"] is None and times["B"] is None and times["C"] is not None
+    assert times["E"] is None and times[""] is not None
+
+
+@pytest.mark.parametrize("time_as_iso", [False, True])
+def test_links_array_native_equals_explode_both_time_flags(spark, time_as_iso):
+    """Both time flags, including the one the oracle-checked queries use
+    (ISO-string times), agree with the exploded formulation; alerts with
+    no response line have no exploded row and an empty native array."""
+    from etl_active911_spark.pipeline.active911 import (
+        dedupe_links,
+        extract_responses,
+        links_array,
+        links_array_native,
+    )
+
+    alerts = _adversarial_alerts(spark)
+    native = dict(alerts.select("id", links_array_native(time_as_iso)).collect())
+    exploded = dict(links_array(dedupe_links(extract_responses(alerts, time_as_iso))).collect())
+    assert set(native) == {str(i) for i in range(len(ADVERSARIAL_RESPONSES))}
+    assert native == {k: exploded.get(k, []) for k in native}
+    assert sum(len(v) for v in native.values()) == 14
+
+
+@pytest.mark.parametrize("time_as_iso", [False, True])
+def test_links_array_native_parses_each_line_once(spark, time_as_iso):
+    """Higher-order lambdas get no common-subexpression elimination
+    (CLAUDE.md rule 39): the per-reference form re-ran the key regex over
+    every line for each of the ~20 references to a link's last line —
+    479 copies of the response regex in the analyzed plan (89 for the
+    ISO flag). The let-bound form parses each line once."""
+    from etl_active911_spark.pipeline.active911 import RESPONSE_REGEX, links_array_native
+
+    plan = make_alert(spark).select(links_array_native(time_as_iso).alias("links"))
+    analyzed = plan._jdf.queryExecution().analyzed().toString()
+    n = analyzed.count(RESPONSE_REGEX)
+    assert 1 <= n <= 4, f"response regex appears {n} times in the analyzed links plan"
 
 
 def test_schema_discovery_matches_actual_output(spark):

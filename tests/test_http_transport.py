@@ -231,6 +231,38 @@ def test_http_sink_chunks_partitions(spark, submit_server):
     assert sizes == [5, 10, 10]
 
 
+def test_run_to_http_streams_features(spark, submit_server, tmp_path):
+    """The streaming sink entry point on its own: a fixture-transport
+    ``active911`` stream → ``to_features`` → ``run_to_http`` (AvailableNow
+    foreachBatch POSTs). One pull, so every alert is posted exactly once;
+    the dead-letter agency is filtered before the transform."""
+    from etl_active911_spark.pipeline.active911 import to_features
+    from etl_active911_spark.sources import active911_source
+    from etl_active911_spark.streaming.http_sink import run_to_http
+    from tests.test_source import ALERT
+
+    d = tmp_path / "wire_sink"
+    d.mkdir()
+    (d / "agency_1.jsonp").write_text(encode_wire_payload([ALERT]))
+    (d / "agency_2.jsonp").write_text(encode_wire_payload([{**ALERT, "id": "43"}]))
+    (d / "agency_3.jsonp").write_text(encode_error_payload("upstream failure"))
+
+    active911_source.register(spark)
+    alerts = (
+        spark.readStream.format("active911")
+        .option("fixture_dir", str(d))
+        .option("max_pulls", "1")
+        .load()
+    )
+    features = to_features(alerts.filter(F.col("_error").isNull()).drop("agency_id", "_error"))
+    srv, url = submit_server
+    run_to_http(features, url, checkpoint_dir=str(tmp_path / "ckpt"), max_features_per_post=1)
+    ids = sorted(f["id"] for p in srv.posts for f in p["features"])
+    assert ids == ["active911-42", "active911-43"]
+    assert all(len(p["features"]) == 1 for p in srv.posts)
+    assert all(p["type"] == "FeatureCollection" for p in srv.posts)
+
+
 def test_control_stream_end_to_end(spark, submit_server, tmp_path):
     """The full reference lifecycle as one streaming job: fixture-transport
     source (overlapping pulls re-emit alerts) → error routing → features →

@@ -26,10 +26,12 @@ def test_reseed_plan_persist_free_and_memoized(spark):
 def test_reseed_plan_occupancy_folded_into_window(spark):
     """The occupancy count is a window function over the cell partition
     (count(1) windowspecdefinition(cell...)), not a separate groupBy-
-    aggregate consumer of the scored assignment."""
+    aggregate consumer of the scored assignment. The argmin window is
+    partitioned by cell too, so the bare 'windowspecdefinition(cell'
+    would pass without the occupancy window: pin the count over it."""
     df = registry.QUERIES["x3_ann_ivf_reseed_plan"](spark, SF_SMOKE)
     analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "windowspecdefinition(cell" in analyzed, analyzed[:3000]
+    assert "count(1) windowspecdefinition(cell" in analyzed, analyzed[:3000]
 
 
 def test_textrank_tokenized_corpus_not_persisted(spark):
@@ -82,3 +84,17 @@ def test_driver_gate_selects_contract_modules():
     assert required <= c.GATE_MODULES
     for name in c.GATE_MODULES:
         assert os.path.exists(os.path.join(here, name)), name
+
+
+def test_driver_gate_runs_named_files_in_full():
+    """A test file or node id named on the command line runs in full; a
+    directory (the bare `pytest tests/` gate run) selects nothing extra."""
+    from tests import conftest as c
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(here)
+    mod = os.path.join(here, "test_active911.py")
+    assert c.named_test_files(["tests/test_active911.py"], root) == {mod}
+    assert c.named_test_files(["tests/test_active911.py::test_links_x"], root) == {mod}
+    assert c.named_test_files(["tests/", "tests"], root) == set()
+    assert c.named_test_files(["test_active911.py"], here) == {mod}
